@@ -10,6 +10,15 @@ only ``master`` and memory sizing change. Scale-relevant choices:
 - Arrow execution for any pandas interchange (vectorized UDF path)
 - parquet pushdown left at defaults (on) — correctness of pushdown is
   asserted in tests via .explain containing PushedFilters
+- ``PARALLEL_LISTING_THRESHOLD``: Spark lists a read's input paths with
+  a distributed Spark job once there are more than
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` of them
+  (default 32). The versioned mirror names up to ``num_buckets`` (64)
+  bucket dirs per read, straight from its manifest, so at the default
+  every merge slice and every query frame paid a 64-task listing job
+  (≈0.5 s) for what one in-process listing does in milliseconds. The constant sits
+  well above any per-read path count the sinks pass, so those reads
+  start no Spark job while planning.
 """
 
 from __future__ import annotations
@@ -19,6 +28,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+PARALLEL_LISTING_THRESHOLD = 1024
 
 
 def get_spark(
@@ -45,6 +55,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(PARALLEL_LISTING_THRESHOLD),
+        )
         # streaming state at scale: RocksDB from day one (SURVEY §7.4.5)
         .config(
             "spark.sql.streaming.stateStore.providerClass",

@@ -23,7 +23,11 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
+from pyspark.sql import (
+    DataFrame, Observation, SparkSession, Window, functions as F, types as T,
+)
 
 from postgres_opensearch_cdc_spark.cdc.envelope import OP_DELETE
 
@@ -39,6 +43,107 @@ def _require_merge_columns(batch: DataFrame, key_cols, seq_cols, op_col) -> None
             f"changelog batch is missing merge-critical column(s) {missing}; "
             "only payload columns may evolve"
         )
+
+
+def _observed(obs: Observation) -> dict:
+    """``obs``'s metrics once the action that carried it has run. When
+    adaptive execution proves the observed input empty it drops the
+    observing node from the final plan and Spark hands back an empty
+    metrics row, which ``Observation.get`` cannot convert — that case
+    means nothing was observed, so it reads as no metrics."""
+    try:
+        return obs.get
+    except Py4JJavaError:
+        return {}
+
+
+def _bucket_column(
+    batch: DataFrame, key_cols, num_buckets: int, bucket_expr: "str | None"
+) -> "F.Column":
+    """A row's mirror bucket. Bucketing strategy decides WHEN pruning
+    pays (measured in SCALE.md §2):
+
+    - hash (default, ``pmod(xxhash64(key), num_buckets)``): co-locates
+      joins, but a batch of random keys touches ~min(|batch|,
+      num_buckets) buckets — pruning only helps when batches are small
+      relative to bucket count.
+    - range (``bucket_expr``, e.g. "id div 100000"): clustered update
+      keys (monotonic PKs, hot recent entities — the common CDC shape)
+      land in few buckets → merges rewrite a sliver of the mirror
+      regardless of mirror size.
+
+    Touched-bucket pruning and the bucket-clustered merge window are
+    only correct when the bucket is a function of the key: an
+    expression over any other column could move a key to a new bucket
+    and leave its old copy behind in the old one. ``bucket_expr`` is
+    therefore resolved against an empty frame holding only the key
+    columns (analysis only, no Spark job) and rejected if it references
+    anything else."""
+    if bucket_expr is None:
+        return F.pmod(
+            F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)
+        )
+    try:
+        bucket = F.expr(bucket_expr)
+        batch.select(*key_cols).limit(0).select(bucket).schema
+    except AnalysisException as exc:
+        raise ValueError(
+            f"bucket_expr {bucket_expr!r} must be an expression over the "
+            f"key column(s) {list(key_cols)} only"
+        ) from exc
+    return bucket
+
+
+def _merge_changes(
+    batch: DataFrame,
+    current: "DataFrame | None",
+    key_cols,
+    seq_cols,
+    op_col: str,
+    bucket: "F.Column | None" = None,
+) -> DataFrame:
+    """Last-write-wins compaction of ``batch`` over the mirrored rows
+    ``current`` (None when there are none): one surviving row per key,
+    deletes removed.
+
+    Mirrored rows re-enter as 'u' changes. The ``_pri`` column breaks
+    seq ties deterministically: an incoming batch row (1) beats the
+    mirrored row (0) at equal seq, so a replayed backfill where both
+    sides carry seq=-1 resolves identically every run (plan-
+    independent), including op='d' vs mirrored 'u'. The union is
+    schema-evolving: a column added upstream (ALTER TABLE ADD COLUMN)
+    appears on new rows and null-fills the mirror history; a column
+    absent from the batch null-fills the batch side — the sink
+    analogue of dynamic mapping (reference W5: new fields indexed on
+    arrival, old docs return null).
+
+    With ``bucket`` (a function of the key, see ``_bucket_column``) the
+    result carries a ``_bucket`` column and is hash-partitioned by it
+    ONCE: the window over (_bucket, key) reuses that exchange, since
+    HashPartitioning(_bucket) already clusters every key, and a
+    ``partitionBy("_bucket")`` write then lays exactly one file per
+    surviving bucket. No explicit partition count, so AQE still
+    coalesces small merges."""
+    unioned = batch.withColumn("_pri", F.lit(1))
+    if current is not None:
+        as_changes = current.select(
+            F.lit("u").alias(op_col),
+            *[F.col(c) for c in current.columns if c != op_col],
+        ).withColumn("_pri", F.lit(0))
+        unioned = unioned.unionByName(as_changes, allowMissingColumns=True)
+    partition_cols = list(key_cols)
+    if bucket is not None:
+        unioned = unioned.withColumn("_bucket", bucket).repartition("_bucket")
+        partition_cols.insert(0, "_bucket")
+    w = Window.partitionBy(*partition_cols).orderBy(
+        *[F.col(c).desc_nulls_last() for c in seq_cols],
+        F.col("_pri").desc(),
+    )
+    return (
+        unioned.withColumn("_rn", F.row_number().over(w))
+        .filter((F.col("_rn") == 1) & (F.col(op_col) != OP_DELETE))
+        .drop("_rn", "_pri")
+    )
 
 
 @dataclass
@@ -99,36 +204,9 @@ class MirrorSink:
         _require_merge_columns(
             batch, self.key_cols, self.seq_cols, self.op_col
         )
-        spark = batch.sparkSession
-        # _pri breaks seq ties deterministically: an incoming batch row
-        # (1) beats the mirrored row (0) at equal seq, so a replayed
-        # backfill where both sides carry seq=-1 resolves identically
-        # every run (plan-independent), including op='d' vs mirrored 'u'.
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            *[F.col(c).desc_nulls_last() for c in self.seq_cols],
-            F.col("_pri").desc(),
-        )
-        if self.exists():
-            current = self.read(spark)
-            as_changes = current.select(
-                F.lit("u").alias(self.op_col),
-                *[F.col(c) for c in current.columns if c != self.op_col],
-            ).withColumn("_pri", F.lit(0))
-            # schema-evolving merge: a column added upstream (ALTER TABLE
-            # ADD COLUMN) appears on new rows and null-fills the mirror
-            # history; a column absent from this batch null-fills the
-            # batch side — the sink analogue of dynamic mapping
-            # (reference W5: new fields indexed on arrival, old docs
-            # return null)
-            unioned = batch.withColumn("_pri", F.lit(1)).unionByName(
-                as_changes, allowMissingColumns=True
-            )
-        else:
-            unioned = batch.withColumn("_pri", F.lit(1))
-        merged = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col(self.op_col) != OP_DELETE))
-            .drop("_rn", "_pri")
+        current = self.read(batch.sparkSession) if self.exists() else None
+        merged = _merge_changes(
+            batch, current, self.key_cols, self.seq_cols, self.op_col
         )
         # ONE job instead of two: write to a sibling tmp dir (the plan
         # still reads the current mirror lazily — different path, so no
@@ -217,23 +295,8 @@ class PartitionedMirrorSink:
     seq_cols: list[str]
     op_col: str = "op"
     num_buckets: int = 64
+    # range bucketing instead of hash — see _bucket_column
     bucket_expr: str | None = None
-
-    def _bucket(self) -> "F.Column":
-        """Bucketing strategy decides WHEN pruning pays (measured in
-        SCALE.md §2):
-
-        - hash (default): co-locates joins, but a batch of random keys
-          touches ~min(|batch|, num_buckets) buckets — pruning only
-          helps when batches are small relative to bucket count.
-        - range (`bucket_expr`, e.g. "id div 100000"): clustered update
-          keys (monotonic PKs, hot recent entities — the common CDC
-          shape) land in few buckets → merges rewrite a sliver of the
-          mirror regardless of mirror size.
-        """
-        if self.bucket_expr is not None:
-            return F.expr(self.bucket_expr)
-        return F.pmod(F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(self.num_buckets))
 
     def exists(self) -> bool:
         # dynamic-overwrite commits do NOT write a root _SUCCESS marker —
@@ -294,19 +357,18 @@ class PartitionedMirrorSink:
         _require_merge_columns(
             batch, self.key_cols, self.seq_cols, self.op_col
         )
-        spark = batch.sparkSession
-        batch = batch.withColumn("_bucket", self._bucket())
-        existed = self.exists()
+        bucket = _bucket_column(
+            batch, self.key_cols, self.num_buckets, self.bucket_expr
+        )
         touched: list = []
         current = None
-        if existed:
+        if self.exists():
             touched = [
                 r["_bucket"]
-                for r in batch.select("_bucket").distinct().collect()
+                for r in batch.select(bucket.alias("_bucket")).distinct().collect()
             ]
-            # list only touched bucket DIRECTORIES (basePath keeps
-            # _bucket as a partition column) and read them with the
-            # sidecar schema — scan AND schema resolution are both
+            # list only touched bucket DIRECTORIES and read them with
+            # the sidecar schema — scan AND schema resolution are both
             # O(|touched buckets|), no whole-mirror footer sweep.
             # Buckets new in this batch have no directory yet and
             # are skipped (nothing to merge).
@@ -314,32 +376,15 @@ class PartitionedMirrorSink:
                 p for b in touched
                 if os.path.isdir(p := f"{self.path}/_bucket={b}")
             ]
-            current = (
-                self._reader(spark)
-                .parquet(*touched_dirs)
-                .filter(F.col("_bucket").isin(touched))
-            ) if touched_dirs else None
-        if current is not None:
-            as_changes = current.select(
-                F.lit("u").alias(self.op_col),
-                *[F.col(c) for c in current.columns if c != self.op_col],
-            ).withColumn("_pri", F.lit(0))
-            # schema-evolving merge (see MirrorSink.apply_batch)
-            unioned = batch.withColumn("_pri", F.lit(1)).unionByName(
-                as_changes, allowMissingColumns=True
-            )
-        else:
-            unioned = batch.withColumn("_pri", F.lit(1))
-        # batch rows (_pri=1) beat mirrored rows (0) at equal seq —
-        # deterministic replay resolution (see MirrorSink.apply_batch)
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            *[F.col(c).desc_nulls_last() for c in self.seq_cols],
-            F.col("_pri").desc(),
-        )
-        merged = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col(self.op_col) != OP_DELETE))
-            .drop("_rn", "_pri")
+            if touched_dirs:
+                current = (
+                    self._reader(batch.sparkSession)
+                    .parquet(*touched_dirs)
+                    .drop("_bucket")
+                )
+        merged = _merge_changes(
+            batch, current, self.key_cols, self.seq_cols, self.op_col,
+            bucket=bucket,
         )
         # persist the running column superset (unionByName already
         # folded any evolved columns in) BEFORE the data write — next
@@ -428,12 +473,8 @@ class VersionedMirrorSink:
     seq_cols: list[str]
     op_col: str = "op"
     num_buckets: int = 64
+    # range bucketing instead of hash — see _bucket_column
     bucket_expr: str | None = None
-
-    def _bucket(self) -> "F.Column":
-        if self.bucket_expr is not None:
-            return F.expr(self.bucket_expr)
-        return F.pmod(F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(self.num_buckets))
 
     @property
     def _data_dir(self) -> str:
@@ -478,34 +519,30 @@ class VersionedMirrorSink:
     def exists(self) -> bool:
         return bool(self._manifests())
 
-    def _bucket_paths(self, manifest: dict, buckets: list | None = None):
-        """Group the manifest's bucket→commit mapping into per-commit
-        path lists (restricted to ``buckets`` when pruning)."""
-        by_commit: dict[str, list[str]] = {}
-        for b, cid in manifest["buckets"].items():
-            if buckets is not None and int(b) not in buckets:
-                continue
-            by_commit.setdefault(cid, []).append(
-                os.path.join(self._data_dir, cid, f"_bucket={b}")
-            )
-        return by_commit
-
     def _read_manifest_slice(
         self, spark: SparkSession, manifest: dict, buckets: list | None = None
     ) -> DataFrame | None:
-        by_commit = self._bucket_paths(manifest, buckets)
-        dfs = [
-            spark.read.option("basePath", os.path.join(self._data_dir, cid)).parquet(*paths)
-            for cid, paths in sorted(by_commit.items())
+        """The manifest's live bucket dirs (only ``buckets`` when
+        pruning) as ONE scan, or None when there are none. Building the
+        frame starts no Spark job: the paths come from the manifest, so
+        no partition discovery is needed (each bucket dir is its own
+        base path, hence no ``_bucket`` column), their count is at most
+        num_buckets — below session.PARALLEL_LISTING_THRESHOLD, so Spark
+        lists them in-process, without a job — and the schema is the manifest's, so
+        no footer inference runs. Commits written before a schema
+        evolution lack the added columns, which the explicit schema
+        null-fills (dynamic-mapping analogue); a widened column (INT →
+        BIGINT) is widened by the parquet reader."""
+        wanted = None if buckets is None else {str(b) for b in buckets}
+        paths = [
+            os.path.join(self._data_dir, cid, f"_bucket={b}")
+            for b, cid in sorted(manifest["buckets"].items())
+            if wanted is None or b in wanted
         ]
-        if not dfs:
+        if not paths:
             return None
-        out = dfs[0]
-        for d in dfs[1:]:
-            # commits written before a schema evolution lack the added
-            # columns — null-fill them on read (dynamic-mapping analogue)
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        schema = T.StructType.fromJson(manifest["schema"])
+        return spark.read.schema(schema).parquet(*paths)
 
     def read(self, spark: SparkSession, version: "int | None" = None) -> DataFrame:
         manifest = self.manifest(version)
@@ -515,7 +552,7 @@ class VersionedMirrorSink:
         if sliced is None:  # committed-but-empty mirror: schema from manifest
             schema = T.StructType.fromJson(manifest["schema"])
             return spark.createDataFrame([], schema)
-        return sliced.drop("_bucket")
+        return sliced
 
     def apply_batch(self, batch: DataFrame, batch_id: int,
                     writer_id: str | None = None) -> None:
@@ -540,7 +577,9 @@ class VersionedMirrorSink:
         ):
             return  # replayed batch already committed — exactly-once
         version = (manifest["version"] + 1) if manifest else 1
-        batch = batch.withColumn("_bucket", self._bucket())
+        bucket = _bucket_column(
+            batch, self.key_cols, self.num_buckets, self.bucket_expr
+        )
         obs = None
         if manifest is None:
             # FIRST commit: no current slice to prune, and the manifest
@@ -553,8 +592,6 @@ class VersionedMirrorSink:
             # bootstrap; the observation sits UPSTREAM of the merge
             # window's survivor filter, so deleted rows still raise
             # the mark exactly as the stats job did).
-            from pyspark.sql import Observation
-
             obs = Observation()
             batch = batch.observe(
                 obs, *[F.max(F.col(c)).alias(c) for c in self.seq_cols]
@@ -571,7 +608,7 @@ class VersionedMirrorSink:
             # seq cols; the merge needs the touched list BEFORE its
             # plan exists, so the two passes cannot fuse here.)
             stats = (
-                batch.groupBy("_bucket")
+                batch.groupBy(bucket.alias("_bucket"))
                 .agg(*[F.max(c).alias(c) for c in self.seq_cols])
                 .collect()
             )
@@ -590,46 +627,19 @@ class VersionedMirrorSink:
                 batch_max = max(vals)
                 prev = prev_hwm.get(c)
                 max_seq[c] = batch_max if prev is None or batch_max > prev else prev
-        unioned = batch
+        current = None
         if manifest is not None:
             current = self._read_manifest_slice(spark, manifest, buckets=touched)
-            if current is not None:
-                as_changes = (
-                    current.drop("_bucket")
-                    .select(
-                        F.lit("u").alias(self.op_col),
-                        *[
-                            F.col(c)
-                            for c in current.drop("_bucket").columns
-                            if c != self.op_col
-                        ],
-                    )
-                    .withColumn("_bucket", self._bucket())
-                    .withColumn("_pri", F.lit(0))
-                )
-                # schema-evolving merge (see MirrorSink.apply_batch)
-                unioned = batch.withColumn("_pri", F.lit(1)).unionByName(
-                    as_changes, allowMissingColumns=True
-                )
-        if "_pri" not in unioned.columns:
-            unioned = unioned.withColumn("_pri", F.lit(1))
-        # batch rows (_pri=1) beat mirrored rows (0) at equal seq —
-        # deterministic replay resolution (see MirrorSink.apply_batch)
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            *[F.col(c).desc_nulls_last() for c in self.seq_cols],
-            F.col("_pri").desc(),
-        )
-        merged = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col(self.op_col) != OP_DELETE))
-            .drop("_rn", "_pri")
+        merged = _merge_changes(
+            batch, current, self.key_cols, self.seq_cols, self.op_col,
+            bucket=bucket,
         )
         commit_id = f"commit-{version:08d}-{uuid.uuid4().hex[:8]}"
         commit_dir = os.path.join(self._data_dir, commit_id)
         merged.write.partitionBy("_bucket").parquet(commit_dir)
         if obs is not None:
             # first-commit high-water mark, observed on the write job
-            for c, v in obs.get.items():
+            for c, v in _observed(obs).items():
                 if isinstance(v, (int, float, str)):
                     max_seq[c] = v
         # buckets that survived the merge: a driver listing of the fresh
@@ -1096,7 +1106,15 @@ class RollupSink:
                 "different modulus would miss bucket dirs"
             )
         metric_cols = self._metric_cols
-        agg = deltas.groupBy(*self._groups).agg(
+        # non-null minmax values per column, counted on the main write:
+        # a column with none this batch takes the zero-I/O carry branch
+        # below without a probe or aux-write job
+        nonnull = Observation() if self.minmax_cols else None
+        main_in = deltas if nonnull is None else deltas.observe(
+            nonnull,
+            *[F.count(f"mmval_{c}").alias(c) for c in self.minmax_cols],
+        )
+        agg = main_in.groupBy(*self._groups).agg(
             *[F.sum(c).alias(c) for c in metric_cols]
         )
         if manifest is not None:
@@ -1116,6 +1134,7 @@ class RollupSink:
         aux_schemas = {}
         aux_buckets = {}
         legacy = manifest is not None and "aux_buckets" not in manifest
+        nonnull_counts = _observed(nonnull) if nonnull is not None else {}
         for c in self.minmax_cols:
             delta = (
                 deltas
@@ -1127,6 +1146,15 @@ class RollupSink:
                 )
             )
             old_map = (manifest or {}).get("aux_buckets", {}).get(c, {})
+            if not nonnull_counts.get(c) and not legacy:
+                # no ±delta for this column: carry the bucket map and
+                # schema forward — zero aux I/O this commit
+                aux_buckets[c] = old_map
+                aux_schemas[c] = (
+                    manifest["aux_schemas"][c] if manifest is not None
+                    else json.loads(delta.schema.json())
+                )
+                continue
             if old_map or legacy:
                 # one micro-batch's distinct bucket list — bounded by
                 # aux_num_buckets, the span store's driver-side pattern
@@ -1143,15 +1171,6 @@ class RollupSink:
                 # bucket map from its own output dirs (r15, one fewer
                 # Spark job per single-batch rollup entry)
                 touched = None
-            if touched == [] and not legacy:
-                # no ±delta for this column: carry the bucket map and
-                # schema forward — zero aux I/O this commit
-                aux_buckets[c] = old_map
-                aux_schemas[c] = (
-                    manifest["aux_schemas"][c] if manifest is not None
-                    else json.loads(delta.schema.json())
-                )
-                continue
             if legacy:
                 # one-time migration: fold the whole legacy store into
                 # the bucketed layout (every bucket rewritten once)

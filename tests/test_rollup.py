@@ -16,6 +16,8 @@ from pyspark.sql import functions as F, types as T
 from postgres_opensearch_cdc_spark.engine import CdcEngine
 from postgres_opensearch_cdc_spark.streaming.apply import RollupSink
 
+from conftest import spark_jobs
+
 TXN_SCHEMA = T.StructType([
     T.StructField("id", T.LongType()),
     T.StructField("status", T.StringType()),
@@ -864,6 +866,30 @@ def test_rollup_aux_bucket_retraction_and_empty_bucket_drop(spark, tmp_path):
         for _ in [0]
     )
     assert total_rows == 1  # only (A, 5.0) survives across all buckets
+
+
+def test_rollup_all_null_minmax_commit_skips_aux_io(spark, tmp_path):
+    """A first commit whose minmax values are all null carries the
+    (empty) bucket map forward: no mm_<c> dir is written and the
+    commit runs no more Spark jobs than the same batch into a rollup
+    without minmax columns — just the main-table write."""
+    sink = _mk_sink(tmp_path)
+    plain = RollupSink(path=str(tmp_path / "plain"), group_col="status")
+    img = spark.createDataFrame([(1, "A", None), (2, "B", None)], TXN_SCHEMA)
+    sc = spark.sparkContext
+    _, jobs = spark_jobs(sc, lambda: sink.apply_batch(
+        sink.delta_frame(img, F.col("status"), 1), 0, writer_id="w"))
+    _, plain_jobs = spark_jobs(sc, lambda: plain.apply_batch(
+        plain.delta_frame(img, F.col("status"), 1), 0, writer_id="w"))
+    assert jobs == plain_jobs
+    m = sink.latest_manifest()
+    assert not os.path.exists(
+        os.path.join(sink._data_dir, m["commit"], "mm_amount"))
+    assert m["aux_buckets"]["amount"] == {}
+    assert _minmax(spark, sink) == {"A": (None, None), "B": (None, None)}
+    # values arriving later take the normal aux path
+    _apply(spark, sink, [(3, "A", 4.0)], 1)
+    assert _minmax(spark, sink) == {"A": (4.0, 4.0), "B": (None, None)}
 
 
 def test_rollup_aux_num_buckets_enforced(spark, tmp_path):

@@ -22,7 +22,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from postgres_opensearch_cdc_spark.streaming.apply import VersionedMirrorSink
+from postgres_opensearch_cdc_spark.streaming.apply import (
+    PartitionedMirrorSink,
+    VersionedMirrorSink,
+)
+
+from conftest import spark_jobs
 
 
 def chg(spark, rows):
@@ -192,3 +197,91 @@ def test_empty_mirror_after_full_delete_readable(spark, sink):
     df = sink.read(spark)
     assert df.count() == 0
     assert "id" in df.columns and "v" in df.columns
+
+
+def test_frame_builds_start_no_jobs_and_buckets_hold_one_file(spark, tmp_path):
+    """All 64 buckets live, then one more merge: building the read
+    frame and a merge slice starts zero Spark jobs (manifest-named
+    paths listed in-process, manifest schema instead of footer
+    inference), and the merge writes exactly one file per bucket."""
+    sink = VersionedMirrorSink(
+        path=str(tmp_path / "mirror"), key_cols=["id"], seq_cols=["offset"],
+    )
+    sink.apply_batch(
+        chg(spark, [("c", i, f"v{i}", i) for i in range(2000)]), batch_id=0
+    )
+    assert len(sink.latest_manifest()["buckets"]) == 64
+    sink.apply_batch(
+        chg(spark, [("u", i, f"w{i}", 5000 + i) for i in range(0, 2000, 3)]),
+        batch_id=1,
+    )
+    manifest = sink.latest_manifest()
+    assert len(manifest["buckets"]) == 64
+    assert set(manifest["buckets"].values()) == {
+        max(manifest["buckets"].values())
+    }, "every bucket was touched, so every bucket moved to the new commit"
+
+    frame, jobs = spark_jobs(spark.sparkContext, lambda: sink.read(spark))
+    assert jobs == 0
+    slice_, jobs = spark_jobs(
+        spark.sparkContext,
+        lambda: sink._read_manifest_slice(spark, manifest, buckets=list(range(64))),
+    )
+    assert jobs == 0
+    assert frame.count() == slice_.count() == 2000
+
+    commit_dir = os.path.join(
+        sink.path, "data", next(iter(manifest["buckets"].values()))
+    )
+    for b in range(64):
+        files = glob.glob(os.path.join(commit_dir, f"_bucket={b}", "*.parquet"))
+        assert len(files) == 1, (b, files)
+
+
+def test_type_widening_across_commits(spark, sink):
+    """An INT column widened to BIGINT upstream, arriving in a batch
+    that touches one of 8 buckets: reads with the manifest's (widened)
+    schema must widen the seven buckets still held in the older
+    commit's INT files."""
+    def batch(rows, qty_type):
+        return spark.createDataFrame(
+            rows, f"op string, id long, qty {qty_type}, offset long"
+        )
+
+    ids = list(range(40))
+    sink.apply_batch(batch([("c", i, i, i) for i in ids], "int"), batch_id=0)
+    sink.apply_batch(batch([("u", 3, 6_000_000_000, 100)], "long"), batch_id=1)
+    manifest = sink.latest_manifest()
+    assert len(set(manifest["buckets"].values())) == 2, "one bucket moved"
+    out = sink.read(spark)
+    assert out.schema["qty"].dataType.typeName() == "long"
+    state = {r["id"]: r["qty"] for r in out.collect()}
+    assert state == {**{i: i for i in ids}, 3: 6_000_000_000}
+    # a later merge over an untouched (still INT-file) bucket widens too
+    other = next(i for i in ids if bucket_of(spark, i) != bucket_of(spark, 3))
+    sink.apply_batch(batch([("u", other, 7, 101)], "int"), batch_id=2)
+    state = {r["id"]: r["qty"] for r in sink.read(spark).collect()}
+    assert state[other] == 7 and state[3] == 6_000_000_000
+    assert len(state) == len(ids)
+
+
+@pytest.mark.parametrize("sink_cls", [VersionedMirrorSink, PartitionedMirrorSink])
+def test_bucket_expr_must_be_function_of_key(spark, tmp_path, sink_cls):
+    """A bucket over a non-key column could move a key between buckets
+    and leave its old copy behind — rejected in both bucketed sinks; a
+    range expression over the key is accepted."""
+    def make(expr, name):
+        return sink_cls(
+            path=str(tmp_path / name), key_cols=["id"], seq_cols=["offset"],
+            bucket_expr=expr,
+        )
+
+    rows = spark.createDataFrame(
+        [("c", 1, "a", 1, "2024-01-01")],
+        "op string, id long, v string, offset long, created_at string",
+    )
+    with pytest.raises(ValueError, match="bucket_expr"):
+        make("created_at", "bad").apply_batch(rows, batch_id=0)
+    good = make("id div 100000", "good")
+    good.apply_batch(rows, batch_id=0)
+    assert [r["id"] for r in good.read(spark).collect()] == [1]
