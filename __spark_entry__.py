@@ -128,26 +128,24 @@ _PRIORITY = [
     "quality_ccnet_buckets",      # pinned bigram relation
     # (b) verbatim output of
     #   python3 tools/staleness.py --emit 35 --exclude <the 15 above>
-    # — never-checked first (none left), then ascending latest-green
-    # round (r7-era rows next)
-    "dsl_top_hits_by_type", "dsl_composite_after", "dsl_knn_query",
-    "dsl_search_after", "dsl_range_metrics", "dsl_week_histogram",
-    "dsl_terms_ordered", "qs_term_conjunction", "qs_spaced_comparison",
-    "qs_wildcard_terms", "qs_grouped_ranges", "qs_free_text",
-    "ann_pq_adc_topk", "ann_pq_rerank_topk", "stratified_split",
-    "source_overlap_matrix", "ts_interpolate_linear",
-    "ts_calendar_heatmap", "ts_ewma", "ts_downsample_lttb",
-    "ts_time_weighted_avg", "ts_state_agg", "bucket_correlation_agg",
-    "ts_seasonal_profile", "important_part_value",
-    "analyzer_custom_chain", "analyzer_edge_ngram_prefix",
-    "window_percent_rank", "fuzzy_name_join", "ppl_ad_zscore",
-    "ppl_dispersion_stats", "dsl_composite_desc", "dsl_nested_ordered",
-    "dsl_filters_metrics", "embedding_centroids",
+    # — never-checked first, then ascending latest-green round
+    "embedding_outliers", "ann_ivf_index_topk", "intervals_query",
+    "distance_feature_query", "random_score_query", "nested_agg_items",
+    "ids_query", "exists_missing_agg", "rank_feature_query",
+    "script_score_query", "span_first_query", "span_or_query",
+    "span_not_query", "term_suggester", "span_containing_query",
+    "rank_eval", "match_phrase_prefix", "weighted_avg_agg",
+    "categorize_text_agg", "has_child_query", "has_parent_query",
+    "terms_lookup_filter", "geo_polygon_query", "global_agg_compare",
+    "transform_entity_centric", "quality_bigram_lm",
+    "length_percentile_filter", "knn_join_topk",
+    "quality_linear_classifier", "vocab_coverage", "ts_autocorr",
+    "ts_rolling_corr", "ts_seasonal_anomaly", "event_transition_matrix",
+    "moving_percentiles_agg",
 ]
 
-# Window accounting: (a)=15, (b)=35 — exactly 50. The round-16 queue
-# continues from tools/staleness.py output after these land in
-# CORRECTNESS_r15.
+# Window accounting: (a)=15, (b)=35 — exactly 50. Block (b) is
+# regenerated whenever a new CORRECTNESS_r*.json lands.
 
 
 def entry(spark: SparkSession) -> DataFrame:

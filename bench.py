@@ -425,11 +425,14 @@ def cdc_throughput(spark, sf_dir: str) -> dict:
             lat.append(time.perf_counter() - t0)
         out["micro_batch_latency_sec"] = round(sum(lat) / len(lat), 3)
 
-        # partition-pruned merge path (PartitionedMirrorSink): same 1k-row
-        # micro-batch against a bucket-partitioned mirror
-        from postgres_opensearch_cdc_spark.streaming.apply import PartitionedMirrorSink
+        # partition-pruned merge path (VersionedMirrorSink, the engine's
+        # mirror): same 1k-row micro-batch against a bucket-partitioned
+        # mirror. Every timed rep carries a batch_id distinct from the
+        # one committed before it, so the sink's replay guard never
+        # turns a timed merge into a no-op.
+        from postgres_opensearch_cdc_spark.streaming.apply import VersionedMirrorSink
 
-        psink = PartitionedMirrorSink(
+        psink = VersionedMirrorSink(
             path=f"{tmp}/pmirror", key_cols=["key"], seq_cols=["ts", "event_id"],
             num_buckets=32,
         )
@@ -451,7 +454,7 @@ def cdc_throughput(spark, sf_dir: str) -> dict:
         # clustered in one key range touches 1 bucket.
         max_key = log.agg(F.max("key")).head()[0]
         span = max_key // 32 + 1
-        rsink = PartitionedMirrorSink(
+        rsink = VersionedMirrorSink(
             path=f"{tmp}/rmirror", key_cols=["key"], seq_cols=["ts", "event_id"],
             num_buckets=32, bucket_expr=f"key div {span}",
         )

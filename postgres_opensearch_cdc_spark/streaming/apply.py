@@ -30,6 +30,7 @@ from pyspark.sql import (
 )
 
 from postgres_opensearch_cdc_spark.cdc.envelope import OP_DELETE
+from postgres_opensearch_cdc_spark.streaming import commits
 
 
 def _require_merge_columns(batch: DataFrame, key_cols, seq_cols, op_col) -> None:
@@ -228,19 +229,22 @@ class MirrorSink:
         self.batches_applied += 1
 
 
+# live-mode trigger interval: the reference's refresh/latency budget
+# (TDD :525, :1437-1445)
+PROCESSING_TIME = "1 second"
+
+
 def start_mirror_stream(
     changes: DataFrame,
     sink: MirrorSink,
     checkpoint_dir: str,
     trigger_available_now: bool = True,
-    processing_time: str = "1 second",
     after_batch=None,
 ):
     """Wire a changelog stream into the mirror sink.
 
     availableNow drains everything then stops (test/backfill mode, ST1);
-    processingTime("1 second") matches the reference's refresh/latency
-    budget (TDD :525, :1437-1445) for the live mode.
+    the live mode triggers every PROCESSING_TIME.
     Stats via observe(): per-batch op-mix counters, the reference's T9.
     ``after_batch(batch_id)``, when given, runs after each batch's
     merge commits — the hook monitor evaluation (engine alerting)
@@ -264,177 +268,18 @@ def start_mirror_stream(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     else:
-        writer = writer.trigger(processingTime=processing_time)
+        writer = writer.trigger(processingTime=PROCESSING_TIME)
     return writer.start()
 
 
 @dataclass
-class PartitionedMirrorSink:
-    """Bucket-partitioned mirror with partition-pruned merges — the
-    plain-parquet realization of "MERGE touches only affected files"
-    (what Delta/Iceberg would give us; SURVEY W1 scale note).
-
-    Layout: mirror partitioned by `_bucket = pmod(xxhash64(key), n)`.
-    Applying a batch:
-      1. bucket the batch rows,
-      2. read ONLY those buckets of the mirror (partition pruning —
-         cheap regardless of total mirror size),
-      3. last-write-wins compact batch ∪ touched-slice,
-      4. dynamic-partition-overwrite: Spark rewrites exactly the
-         partitions present in the output; untouched buckets are never
-         read or written.
-
-    Merge cost therefore scales with |batch| + |touched buckets|, not
-    |mirror| — the property that makes a 100 TB mirror maintainable at
-    a 1k-events/s trickle. Verified (untouched partition files remain
-    byte-identical) in tests/test_partitioned_mirror.py.
-    """
-
-    path: str
-    key_cols: list[str]
-    seq_cols: list[str]
-    op_col: str = "op"
-    num_buckets: int = 64
-    # range bucketing instead of hash — see _bucket_column
-    bucket_expr: str | None = None
-
-    def exists(self) -> bool:
-        # dynamic-overwrite commits do NOT write a root _SUCCESS marker —
-        # presence of any bucket partition directory is the real signal
-        if not os.path.isdir(self.path):
-            return False
-        return any(e.startswith("_bucket=") for e in os.listdir(self.path))
-
-    # -- schema sidecar -------------------------------------------------
-    # Partition-pruned merges leave MIXED-schema bucket files after a
-    # schema evolution (only touched buckets carry the new column).
-    # mergeSchema handles that, but it runs a footer-merge job over
-    # every file it reads ON EVERY BATCH — O(|mirror|) plan-time work
-    # that defeats the pruning this sink exists for. Instead the sink
-    # persists the running column superset (what unionByName produced)
-    # in a root-level sidecar after each write and reads with that
-    # EXPLICIT schema: zero footer jobs, files missing a column yield
-    # nulls, plan cost independent of mirror size. The sidecar sits
-    # outside the _bucket= partition dirs so dynamic overwrite never
-    # touches it; mirrors written before the sidecar existed fall back
-    # to mergeSchema once and gain the sidecar on their next write.
-
-    def _schema_path(self) -> str:
-        return os.path.join(self.path, "_mirror_schema.json")
-
-    def _stored_schema(self) -> "T.StructType | None":
-        import json
-
-        try:
-            with open(self._schema_path()) as fh:
-                return T.StructType.fromJson(json.load(fh))
-        except (OSError, ValueError, KeyError):
-            return None
-
-    def _store_schema(self, schema: "T.StructType") -> None:
-        import json
-
-        # sidecar now precedes the first data write — the mirror dir
-        # may not exist yet
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._schema_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(schema.jsonValue(), fh)
-        os.replace(tmp, self._schema_path())  # atomic on POSIX
-
-    def _reader(self, spark: SparkSession):
-        stored = self._stored_schema()
-        reader = spark.read.option("basePath", self.path)
-        if stored is not None:
-            return reader.schema(stored)
-        return reader.option("mergeSchema", "true")
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return self._reader(spark).parquet(self.path).drop("_bucket")
-
-    def apply_batch(self, batch: DataFrame, batch_id: int,
-                    writer_id: str | None = None) -> None:
-        _require_merge_columns(
-            batch, self.key_cols, self.seq_cols, self.op_col
-        )
-        bucket = _bucket_column(
-            batch, self.key_cols, self.num_buckets, self.bucket_expr
-        )
-        touched: list = []
-        current = None
-        if self.exists():
-            touched = [
-                r["_bucket"]
-                for r in batch.select(bucket.alias("_bucket")).distinct().collect()
-            ]
-            # list only touched bucket DIRECTORIES and read them with
-            # the sidecar schema — scan AND schema resolution are both
-            # O(|touched buckets|), no whole-mirror footer sweep.
-            # Buckets new in this batch have no directory yet and
-            # are skipped (nothing to merge).
-            touched_dirs = [
-                p for b in touched
-                if os.path.isdir(p := f"{self.path}/_bucket={b}")
-            ]
-            if touched_dirs:
-                current = (
-                    self._reader(batch.sparkSession)
-                    .parquet(*touched_dirs)
-                    .drop("_bucket")
-                )
-        merged = _merge_changes(
-            batch, current, self.key_cols, self.seq_cols, self.op_col,
-            bucket=bucket,
-        )
-        # persist the running column superset (unionByName already
-        # folded any evolved columns in) BEFORE the data write — next
-        # batch plans with it instead of sweeping footers; _bucket
-        # stays a discovered partition column. Order matters: a crash
-        # between sidecar and data write leaves a sidecar listing a
-        # column the files lack, which is benign (explicit-schema
-        # reads null-fill it); the reverse order risked a sidecar
-        # MISSING an evolved column, silently dropping it on every
-        # later read and merge.
-        self._store_schema(merged.drop("_bucket").schema)
-        # ONE job instead of two (and no dynamic-overwrite conf dance):
-        # write the merged buckets to a sibling tmp dir — the plan still
-        # reads the live bucket dirs lazily, different path, so no
-        # read-overwrite hazard and no localCheckpoint materialization
-        # pass — then swap the produced bucket dirs into place. A
-        # touched bucket whose keys were all deleted produces no tmp
-        # dir and is dropped, matching the old explicit cleanup; the
-        # produced-bucket set comes from a dir listing, replacing the
-        # second distinct().collect() job the old form paid.
-        import shutil
-
-        tmp = self.path + ".tmpw"
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-        out_buckets = {
-            d.split("=", 1)[1]
-            for d in os.listdir(tmp)
-            if d.startswith("_bucket=")
-        }
-        os.makedirs(self.path, exist_ok=True)
-        for b in out_buckets:
-            dst = os.path.join(self.path, f"_bucket={b}")
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(os.path.join(tmp, f"_bucket={b}"), dst)
-        for b in {str(b) for b in touched} - out_buckets:
-            shutil.rmtree(
-                os.path.join(self.path, f"_bucket={b}"), ignore_errors=True
-            )
-        # the tmp write's _SUCCESS marker becomes the mirror's
-        open(os.path.join(self.path, "_SUCCESS"), "w").close()
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@dataclass
 class VersionedMirrorSink:
-    """Object-store-safe partitioned mirror: the commit-marker protocol
-    form of PartitionedMirrorSink (which relies on dynamic partition
-    overwrite + a local-FS directory delete — non-atomic on object
-    stores, SURVEY W1 scale note).
+    """Bucket-partitioned mirror with partition-pruned merges, committed
+    through the object-store-safe manifest protocol (streaming/commits.py)
+    — the plain-parquet realization of "MERGE touches only affected
+    files" (what Delta/Iceberg would give us; SURVEY W1 scale note),
+    without the dynamic partition overwrite and directory deletes that
+    are non-atomic on object stores.
 
     Snapshot layout (mini table-format, Iceberg-style but dependency
     free):
@@ -458,11 +303,13 @@ class VersionedMirrorSink:
         manifest's batch_id (exactly-once commit, stronger than the
         merge's last-write-wins idempotency which still backstops it).
 
-    Merge cost is |batch| + |touched bucket slices| exactly like
-    PartitionedMirrorSink — the pruning now happens by reading only the
-    touched buckets' directories out of the manifest, which is file-level
-    pruning without even a partition-filter scan. Old commits/manifests
-    accumulate until vacuum() — time-travel for free until then.
+    Merge cost is |batch| + |touched bucket slices|, not |mirror| — the
+    property that makes a 100 TB mirror maintainable at a 1k-events/s
+    trickle. The pruning reads only the touched buckets' directories out
+    of the manifest, which is file-level pruning without even a
+    partition-filter scan; untouched buckets are never read or written.
+    Old commits/manifests accumulate until vacuum() — time-travel for
+    free until then.
 
     Single-writer (one streaming query per mirror), like every
     foreachBatch sink; readers are lock-free and always consistent.
@@ -484,14 +331,6 @@ class VersionedMirrorSink:
     def _commits_dir(self) -> str:
         return os.path.join(self.path, "_commits")
 
-    def _manifests(self) -> list[str]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._commits_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
     def latest_manifest(self) -> dict | None:
         return self.manifest()
 
@@ -499,25 +338,10 @@ class VersionedMirrorSink:
         """Load a committed manifest: the latest, or an explicit
         ``version`` — every un-vacuumed commit is a readable snapshot
         (time travel for free, see class docstring)."""
-        import json
-
-        names = self._manifests()
-        if not names:
-            return None
-        if version is None:
-            name = names[-1]
-        else:
-            name = f"v{version:08d}.json"
-            if name not in names:
-                raise FileNotFoundError(
-                    f"no committed version {version} under {self.path} "
-                    f"(available: {[int(n[1:-5]) for n in names]})"
-                )
-        with open(os.path.join(self._commits_dir, name)) as fh:
-            return json.load(fh)
+        return commits.load(self._commits_dir, version)
 
     def exists(self) -> bool:
-        return bool(self._manifests())
+        return bool(commits.manifest_names(self._commits_dir))
 
     def _read_manifest_slice(
         self, spark: SparkSession, manifest: dict, buckets: list | None = None
@@ -564,19 +388,9 @@ class VersionedMirrorSink:
 
         spark = batch.sparkSession
         manifest = self.latest_manifest()
-        if (
-            manifest is not None
-            and batch_id >= 0
-            and manifest.get("batch_id") == batch_id
-            # batch ids are only meaningful PER STREAMING QUERY: a new
-            # checkpoint (different changelog dir, re-route) restarts at
-            # batch 0, which must not alias the old stream's batch 0 —
-            # the (writer, batch) pair is Spark's documented foreachBatch
-            # dedup key
-            and manifest.get("writer_id") == writer_id
-        ):
+        if commits.is_replay(manifest, batch_id, writer_id):
             return  # replayed batch already committed — exactly-once
-        version = (manifest["version"] + 1) if manifest else 1
+        version = commits.next_version(manifest)
         bucket = _bucket_column(
             batch, self.key_cols, self.num_buckets, self.bucket_expr
         )
@@ -654,22 +468,14 @@ class VersionedMirrorSink:
             buckets.pop(str(b), None)
         for b in sorted(out_buckets):
             buckets[str(b)] = commit_id
-        os.makedirs(self._commits_dir, exist_ok=True)
-        tmp = os.path.join(self._commits_dir, f".tmp-v{version:08d}.json")
-        final = os.path.join(self._commits_dir, f"v{version:08d}.json")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "batch_id": batch_id,
-                    "writer_id": writer_id,
-                    "buckets": buckets,
-                    "max_seq": max_seq,
-                    "schema": json.loads(merged.drop("_bucket").schema.json()),
-                },
-                fh,
-            )
-        os.replace(tmp, final)  # the commit point (object store: one PUT)
+        commits.publish(self._commits_dir, {
+            "version": version,
+            "batch_id": batch_id,
+            "writer_id": writer_id,
+            "buckets": buckets,
+            "max_seq": max_seq,
+            "schema": json.loads(merged.drop("_bucket").schema.json()),
+        })
 
     def raise_high_water(self, max_seq: dict) -> None:
         """Metadata-only commit: bump the manifest's sequence
@@ -679,8 +485,6 @@ class VersionedMirrorSink:
         mark — its live rows' max seq can sit below offsets the source
         had already consumed (e.g. a high-seq delete), and a bulk
         write or replayed stream batch must still rank correctly."""
-        import json
-
         manifest = self.latest_manifest()
         if manifest is None:
             raise FileNotFoundError(f"no committed snapshot under {self.path}")
@@ -690,47 +494,24 @@ class VersionedMirrorSink:
                 continue
             prev = merged.get(c)
             merged[c] = v if prev is None or v > prev else prev
-        version = manifest["version"] + 1
-        tmp = os.path.join(self._commits_dir, f".tmp-v{version:08d}.json")
-        final = os.path.join(self._commits_dir, f"v{version:08d}.json")
-        with open(tmp, "w") as fh:
-            # batch_id carried over: the exactly-once replay guard for
-            # the last data batch must survive this metadata commit
-            json.dump({**manifest, "version": version, "max_seq": merged}, fh)
-        os.replace(tmp, final)
+        # batch_id carried over: the exactly-once replay guard for the
+        # last data batch must survive this metadata commit
+        commits.publish(self._commits_dir, {
+            **manifest,
+            "version": commits.next_version(manifest),
+            "max_seq": merged,
+        })
 
     def vacuum(self, keep_versions: int = 1) -> int:
         """GC unreferenced commit dirs + manifests older than the last
         ``keep_versions``. Maintenance only — correctness never depends
-        on any delete. Returns the number of commit dirs removed.
-
-        ``keep_versions`` must be >= 1: a mirror with zero committed
-        manifests is unreadable, so vacuuming down to nothing is never
-        a maintenance operation."""
-        import json
-        import shutil
-
-        if keep_versions < 1:
-            raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
-        names = self._manifests()
-        if not names:
+        on any delete. Returns the number of commit dirs removed;
+        ``keep_versions`` must be >= 1 (see ``commits.prune``)."""
+        kept = commits.prune(self._commits_dir, keep_versions)
+        if not kept:
             return 0
-        keep = names[-keep_versions:]
-        # drop old manifests FIRST so a crash mid-vacuum can't leave a
-        # manifest referencing deleted data
-        for n in names[: len(names) - len(keep)]:
-            os.remove(os.path.join(self._commits_dir, n))
-        live: set[str] = set()
-        for n in keep:
-            with open(os.path.join(self._commits_dir, n)) as fh:
-                live |= set(json.load(fh)["buckets"].values())
-        removed = 0
-        if os.path.isdir(self._data_dir):
-            for e in os.listdir(self._data_dir):
-                if e.startswith("commit-") and e not in live:
-                    shutil.rmtree(os.path.join(self._data_dir, e))
-                    removed += 1
-        return removed
+        live = {cid for m in kept for cid in m["buckets"].values()}
+        return commits.remove_unreferenced(self._data_dir, live)
 
 
 @dataclass
@@ -944,43 +725,11 @@ class RollupSink:
     def _commits_dir(self) -> str:
         return os.path.join(self.path, "_commits")
 
-    def _manifests(self) -> list[str]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._commits_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
     def latest_manifest(self) -> dict | None:
-        import json
-
-        names = self._manifests()
-        if not names:
-            return None
-        with open(os.path.join(self._commits_dir, names[-1])) as fh:
-            return json.load(fh)
+        return commits.load(self._commits_dir)
 
     def exists(self) -> bool:
-        return bool(self._manifests())
-
-    def _manifest_at(self, version: "int | None") -> dict:
-        import json
-
-        if version is None:
-            manifest = self.latest_manifest()
-            if manifest is None:
-                raise FileNotFoundError(
-                    f"no committed rollup under {self.path}"
-                )
-            return manifest
-        name = f"v{version:08d}.json"
-        if name not in self._manifests():
-            raise FileNotFoundError(
-                f"no committed rollup version {version} under {self.path}"
-            )
-        with open(os.path.join(self._commits_dir, name)) as fh:
-            return json.load(fh)
+        return bool(commits.manifest_names(self._commits_dir))
 
     def _read_main(self, spark: SparkSession, manifest: dict) -> DataFrame:
         return spark.read.schema(
@@ -1035,7 +784,9 @@ class RollupSink:
         (avg's sum/valcnt) — the re-aggregation inputs rollup search
         needs (avg over a coarser bucket is SUM(sum)/SUM(valcnt),
         never avg-of-avgs)."""
-        manifest = self._manifest_at(version)
+        manifest = commits.load(self._commits_dir, version)
+        if manifest is None:
+            raise FileNotFoundError(f"no committed rollup under {self.path}")
         out = self._read_main(spark, manifest)
         for c in self.minmax_cols:
             mm = (
@@ -1089,12 +840,7 @@ class RollupSink:
 
         spark = deltas.sparkSession
         manifest = self.latest_manifest()
-        if (
-            manifest is not None
-            and batch_id >= 0
-            and manifest.get("batch_id") == batch_id
-            and manifest.get("writer_id") == writer_id
-        ):
+        if commits.is_replay(manifest, batch_id, writer_id):
             return  # replayed batch: additive merge MUST NOT reapply
         if (manifest is not None
                 and "aux_num_buckets" in manifest
@@ -1125,7 +871,6 @@ class RollupSink:
                 .agg(*[F.sum(c).alias(c) for c in metric_cols])
             )
         merged = agg.filter(F.col("doc_count") != 0)
-        version = (manifest["version"] + 1) if manifest else 1
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         commit_dir = os.path.join(self._data_dir, commit)
         merged.write.mode("overwrite").parquet(
@@ -1220,47 +965,25 @@ class RollupSink:
             # hit 0) writes no dir and drops out of the map — that
             # disappearance IS the retraction, bucket-granular
             aux_buckets[c] = {**carried, **written}
-        os.makedirs(self._commits_dir, exist_ok=True)
-        tmp = os.path.join(self._commits_dir, f".tmp-v{version:08d}.json")
-        final = os.path.join(self._commits_dir, f"v{version:08d}.json")
-        with open(tmp, "w") as fh:
-            json.dump({
-                "version": version,
-                "batch_id": batch_id,
-                "writer_id": writer_id,
-                "commit": commit,
-                "schema": json.loads(merged.schema.json()),
-                "aux_schemas": aux_schemas,
-                "aux_buckets": aux_buckets,
-                "aux_num_buckets": self.aux_num_buckets,
-            }, fh)
-        os.replace(tmp, final)  # the commit point
+        commits.publish(self._commits_dir, {
+            "version": commits.next_version(manifest),
+            "batch_id": batch_id,
+            "writer_id": writer_id,
+            "commit": commit,
+            "schema": json.loads(merged.schema.json()),
+            "aux_schemas": aux_schemas,
+            "aux_buckets": aux_buckets,
+            "aux_num_buckets": self.aux_num_buckets,
+        })
 
     def vacuum(self, keep_versions: int = 1) -> int:
-        """GC old rollup versions (manifests first, so a crash can't
-        leave a manifest referencing deleted data)."""
-        import json
-        import shutil
-
-        if keep_versions < 1:
-            raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
-        names = self._manifests()
-        keep = names[-keep_versions:]
+        """GC old rollup versions, manifests first (``commits.prune``);
+        returns the number of commit dirs removed."""
         live = set()
-        for n in names[: len(names) - len(keep)]:
-            os.remove(os.path.join(self._commits_dir, n))
-        for n in keep:
-            with open(os.path.join(self._commits_dir, n)) as fh:
-                m = json.load(fh)
+        for m in commits.prune(self._commits_dir, keep_versions):
             live.add(m["commit"])
             # untouched aux buckets are REFERENCED from older commits,
             # not rewritten — those commits stay live with the manifest
             for bucket_map in m.get("aux_buckets", {}).values():
                 live.update(bucket_map.values())
-        removed = 0
-        if os.path.isdir(self._data_dir):
-            for e in os.listdir(self._data_dir):
-                if e.startswith("commit-") and e not in live:
-                    shutil.rmtree(os.path.join(self._data_dir, e))
-                    removed += 1
-        return removed
+        return commits.remove_unreferenced(self._data_dir, live)

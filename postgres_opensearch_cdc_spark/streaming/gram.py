@@ -29,7 +29,6 @@ batch SQL oracle knows nothing about the split.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from dataclasses import dataclass
@@ -41,6 +40,7 @@ from postgres_opensearch_cdc_spark.queries.training_pipeline11 import (
     EMB_DIM,
     gram_upper,
 )
+from postgres_opensearch_cdc_spark.streaming import commits
 
 _GRAM_SCHEMA = T.StructType([
     T.StructField("i", T.IntegerType()),
@@ -69,20 +69,8 @@ class GramRollupSink:
     def _commits_dir(self) -> str:
         return os.path.join(self.path, "_commits")
 
-    def _manifests(self) -> list[str]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._commits_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
     def latest_manifest(self) -> dict | None:
-        names = self._manifests()
-        if not names:
-            return None
-        with open(os.path.join(self._commits_dir, names[-1])) as fh:
-            return json.load(fh)
+        return commits.load(self._commits_dir)
 
     def _check_dim(self, manifest: dict) -> None:
         if manifest.get("dim") != self.dim:
@@ -108,12 +96,7 @@ class GramRollupSink:
                     writer_id: str | None = None) -> None:
         spark = batch.sparkSession
         manifest = self.latest_manifest()
-        if (
-            manifest is not None
-            and batch_id >= 0
-            and manifest.get("batch_id") == batch_id
-            and manifest.get("writer_id") == writer_id
-        ):
+        if commits.is_replay(manifest, batch_id, writer_id):
             return  # replay guard: MANDATORY — the merge below ADDS
         if manifest is not None:
             self._check_dim(manifest)
@@ -131,24 +114,14 @@ class GramRollupSink:
                 .groupBy("i", "j")
                 .agg(F.sum("gram_raw").alias("gram_raw"))
             )
-        version = (manifest["version"] + 1) if manifest else 1
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         partial.write.mode("overwrite").parquet(
             os.path.join(self._data_dir, commit, "gram")
         )
-        os.makedirs(self._commits_dir, exist_ok=True)
-        tmp = os.path.join(self._commits_dir, f".v{version:08d}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "commit": commit,
-                    "batch_id": batch_id,
-                    "writer_id": writer_id,
-                    "dim": self.dim,
-                },
-                fh,
-            )
-        os.replace(
-            tmp, os.path.join(self._commits_dir, f"v{version:08d}.json")
-        )
+        commits.publish(self._commits_dir, {
+            "version": commits.next_version(manifest),
+            "commit": commit,
+            "batch_id": batch_id,
+            "writer_id": writer_id,
+            "dim": self.dim,
+        })

@@ -35,7 +35,6 @@ value-checks stream ≡ batch through DuckDB."""
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from dataclasses import dataclass
@@ -49,6 +48,7 @@ from postgres_opensearch_cdc_spark.functions.sketch import (
     hll_params,
     hll_registers,
 )
+from postgres_opensearch_cdc_spark.streaming import commits
 
 _REG_SCHEMA = T.StructType([
     T.StructField("g", T.StringType()),
@@ -91,20 +91,8 @@ class HllRollupSink:
     def _commits_dir(self) -> str:
         return os.path.join(self.path, "_commits")
 
-    def _manifests(self) -> list[str]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._commits_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
     def latest_manifest(self) -> dict | None:
-        names = self._manifests()
-        if not names:
-            return None
-        with open(os.path.join(self._commits_dir, names[-1])) as fh:
-            return json.load(fh)
+        return commits.load(self._commits_dir)
 
     def registers(self, spark: SparkSession) -> DataFrame:
         """The published (g, bucket, register) table (empty before the
@@ -135,12 +123,7 @@ class HllRollupSink:
                     writer_id: str | None = None) -> None:
         spark = batch.sparkSession
         manifest = self.latest_manifest()
-        if (
-            manifest is not None
-            and batch_id >= 0
-            and manifest.get("batch_id") == batch_id
-            and manifest.get("writer_id") == writer_id
-        ):
+        if commits.is_replay(manifest, batch_id, writer_id):
             return  # replay: skipping is an optimization — the merge
             # below would be a no-op anyway (max is idempotent)
         m = hll_params(self.p)[0]
@@ -170,27 +153,17 @@ class HllRollupSink:
                 .groupBy("g", "bucket")
                 .agg(F.max("register").alias("register"))
             )
-        version = (manifest["version"] + 1) if manifest else 1
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         regs.write.mode("overwrite").parquet(
             os.path.join(self._data_dir, commit, "regs")
         )
-        os.makedirs(self._commits_dir, exist_ok=True)
-        tmp = os.path.join(self._commits_dir, f".v{version:08d}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "commit": commit,
-                    "batch_id": batch_id,
-                    "writer_id": writer_id,
-                    "m": m,
-                },
-                fh,
-            )
-        os.replace(
-            tmp, os.path.join(self._commits_dir, f"v{version:08d}.json")
-        )
+        commits.publish(self._commits_dir, {
+            "version": commits.next_version(manifest),
+            "commit": commit,
+            "batch_id": batch_id,
+            "writer_id": writer_id,
+            "m": m,
+        })
 
 
 @dataclass
@@ -232,20 +205,8 @@ class CmsRollupSink:
     def _commits_dir(self) -> str:
         return os.path.join(self.path, "_commits")
 
-    def _manifests(self) -> list[str]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._commits_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
     def latest_manifest(self) -> dict | None:
-        names = self._manifests()
-        if not names:
-            return None
-        with open(os.path.join(self._commits_dir, names[-1])) as fh:
-            return json.load(fh)
+        return commits.load(self._commits_dir)
 
     def cells(self, spark: SparkSession) -> DataFrame:
         """The published (r, bucket, cell) grid (empty before the
@@ -316,12 +277,7 @@ class CmsRollupSink:
                     writer_id: str | None = None) -> None:
         spark = batch.sparkSession
         manifest = self.latest_manifest()
-        if (
-            manifest is not None
-            and batch_id >= 0
-            and manifest.get("batch_id") == batch_id
-            and manifest.get("writer_id") == writer_id
-        ):
+        if commits.is_replay(manifest, batch_id, writer_id):
             return  # replay: MANDATORY skip — additive merge would
             # double-count (see class docstring)
         if manifest is not None and (
@@ -358,25 +314,15 @@ class CmsRollupSink:
             F.col("bucket").cast("long"),
             F.col("cell").cast("long"),
         )
-        version = (manifest["version"] + 1) if manifest else 1
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         cells.write.mode("overwrite").parquet(
             os.path.join(self._data_dir, commit, "cells")
         )
-        os.makedirs(self._commits_dir, exist_ok=True)
-        tmp = os.path.join(self._commits_dir, f".v{version:08d}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "commit": commit,
-                    "batch_id": batch_id,
-                    "writer_id": writer_id,
-                    "depth": self.depth,
-                    "width": self.width,
-                },
-                fh,
-            )
-        os.replace(
-            tmp, os.path.join(self._commits_dir, f"v{version:08d}.json")
-        )
+        commits.publish(self._commits_dir, {
+            "version": commits.next_version(manifest),
+            "commit": commit,
+            "batch_id": batch_id,
+            "writer_id": writer_id,
+            "depth": self.depth,
+            "width": self.width,
+        })

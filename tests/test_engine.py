@@ -36,9 +36,8 @@ def envelope(op, rid, status, ctype, offset):
 import pytest
 
 
-@pytest.mark.parametrize("sink_mode", ["versioned", "partitioned", "simple"])
-def test_full_lifecycle(spark, tmp_path, sink_mode):
-    engine = CdcEngine(spark=spark, workdir=str(tmp_path), sink_mode=sink_mode)
+def test_full_lifecycle(spark, tmp_path):
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
     engine.register_table("card", CARD_SCHEMA)
 
     # snapshot: 3 cards
@@ -263,12 +262,11 @@ def test_engine_msearch_and_explain(spark, tmp_path):
     assert "Physical Plan" in plan and "ACTIVE" in plan
 
 
-@pytest.mark.parametrize("sink_mode", ["versioned", "partitioned"])
-def test_engine_maintenance_apis(spark, tmp_path, sink_mode):
+def test_engine_maintenance_apis(spark, tmp_path):
     """_count / _delete_by_query / _update_by_query: maintenance flows
     expressed as keyed-merge batches (never rewrite-in-place), so they
     compose with streaming and replay idempotently."""
-    engine = CdcEngine(spark=spark, workdir=str(tmp_path), sink_mode=sink_mode)
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
     engine.register_table("card", CARD_SCHEMA)
     engine.backfill("card", spark.createDataFrame(
         [(i, "ACTIVE" if i % 2 else "BLOCKED", "DEBIT") for i in range(1, 11)],

@@ -22,10 +22,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from postgres_opensearch_cdc_spark.streaming.apply import (
-    PartitionedMirrorSink,
-    VersionedMirrorSink,
-)
+from postgres_opensearch_cdc_spark.streaming.apply import VersionedMirrorSink
+from postgres_opensearch_cdc_spark.streaming.commits import manifest_names
 
 from conftest import spark_jobs
 
@@ -156,7 +154,7 @@ def test_vacuum_keeps_live_commits(spark, sink):
     assert live <= remaining
     assert {r["v"] for r in sink.read(spark).collect()} == {"v3"}
     # exactly one manifest left
-    assert len(sink._manifests()) == 1
+    assert len(manifest_names(sink._commits_dir)) == 1
 
 
 def test_vacuum_zero_keep_versions_rejected(spark, sink):
@@ -165,13 +163,46 @@ def test_vacuum_zero_keep_versions_rejected(spark, sink):
     leave the mirror untouched."""
     for i in range(3):
         sink.apply_batch(chg(spark, [("u", 1, f"v{i}", i)]), batch_id=i)
-    manifests_before = sink._manifests()
+    manifests_before = manifest_names(sink._commits_dir)
     with pytest.raises(ValueError, match="keep_versions"):
         sink.vacuum(keep_versions=0)
     with pytest.raises(ValueError, match="keep_versions"):
         sink.vacuum(keep_versions=-1)
-    assert sink._manifests() == manifests_before
+    assert manifest_names(sink._commits_dir) == manifests_before
     assert {r["v"] for r in sink.read(spark).collect()} == {"v2"}
+
+
+def test_versioned_mirror_schema_evolution(spark, tmp_path):
+    """Schema evolution across commits: a column added mid-stream
+    null-fills untouched buckets' older commit files on read, and the
+    evolved column survives later batches without it."""
+    sink = VersionedMirrorSink(
+        path=str(tmp_path / "vmirror"),
+        key_cols=["id"],
+        seq_cols=["offset"],
+        num_buckets=4,
+    )
+    b1 = spark.createDataFrame(
+        [("c", 1, "ok", 1), ("c", 2, "new", 2), ("c", 3, "x", 3)],
+        "op string, id long, status string, offset long",
+    )
+    sink.apply_batch(b1, 0)
+    b2 = spark.createDataFrame(
+        [("u", 2, "upd", 4, "gold")],
+        "op string, id long, status string, offset long, tier string",
+    )
+    sink.apply_batch(b2, 1)
+    rows = {r["id"]: r for r in sink.read(spark).collect()}
+    assert rows[2]["tier"] == "gold"
+    assert rows[1]["tier"] is None and rows[3]["tier"] is None
+    b3 = spark.createDataFrame(
+        [("u", 3, "y", 5)],
+        "op string, id long, status string, offset long",
+    )
+    sink.apply_batch(b3, 2)
+    rows = {r["id"]: r for r in sink.read(spark).collect()}
+    assert rows[3]["status"] == "y"
+    assert rows[2]["tier"] == "gold", "evolved column lost across commits"
 
 
 def test_equal_seq_replay_batch_row_wins(spark, sink):
@@ -265,13 +296,12 @@ def test_type_widening_across_commits(spark, sink):
     assert len(state) == len(ids)
 
 
-@pytest.mark.parametrize("sink_cls", [VersionedMirrorSink, PartitionedMirrorSink])
-def test_bucket_expr_must_be_function_of_key(spark, tmp_path, sink_cls):
+def test_bucket_expr_must_be_function_of_key(spark, tmp_path):
     """A bucket over a non-key column could move a key between buckets
-    and leave its old copy behind — rejected in both bucketed sinks; a
-    range expression over the key is accepted."""
+    and leave its old copy behind — rejected; a range expression over
+    the key is accepted."""
     def make(expr, name):
-        return sink_cls(
+        return VersionedMirrorSink(
             path=str(tmp_path / name), key_cols=["id"], seq_cols=["offset"],
             bucket_expr=expr,
         )
